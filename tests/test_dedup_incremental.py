@@ -536,11 +536,13 @@ def test_index_bucket_stats_watermark(spark, tmp_path, capsys):
 def test_keep_best_from_index_matches_batch(spark, tmp_path):
     """keep_best_from_index ≡ batch near_dup_keep_best on the accumulated
     corpus: same clusters, highest-quality member kept, quality supplied
-    as a side table (the index stores only doc_id/text)."""
+    as a side table (the index stores only doc_id/text). A cluster member
+    with a null score ranks last on both paths."""
     rows = [
         (1, BASE, 10), (2, BASE + " extra", 99), (3, ROWS_B1[2][1], 5),
         (4, BASE + " tail", 50),
         (5, ROWS_B2[1][1], 7),
+        (6, BASE + " again", None),
     ]
     quality = spark.createDataFrame(
         [(d, q) for d, _t, q in rows], "doc_id int, quality int"
@@ -562,6 +564,7 @@ def test_keep_best_from_index_matches_batch(spark, tmp_path):
         spark, idx, quality, "quality"
     ).collect()}
     assert kb[2].is_kept and not kb[1].is_kept  # quality 99 beats min-id
+    assert kb[6].canonical_id == 1 and kb[6].kept_id == 2  # null ranks last
     # docs missing from the quality side rank last but stay listed: with
     # doc 2 unscored, the cluster's best scored member (doc 4, q=50) wins
     got2 = {r.doc_id: r for r in di.keep_best_from_index(
@@ -1560,44 +1563,6 @@ def test_reconcile_watermark_frozen_against_mid_run_ingest(
     wm = max(r.watermark
              for r in spark.read.parquet(f"{idx}/reconciled").collect())
     assert wm == 2
-
-
-def test_cli_nowatermarks_implies_nopersistfailures(spark, tmp_path, capsys):
-    """r10 ADVICE fix: NEAR_DUP_INDEX_RECONCILE --noWatermarks is the
-    ground-truth control and must neither skip known-failed edges nor
-    record this diagnostic run's failures — i.e. it implies
-    --noPersistFailures (previously a control run with failures still
-    persisted silently skipped known-failed edges, making it
-    incomparable to the default path)."""
-    from unittest import mock
-
-    from translator_tm_provider_pipelines_spark import cli
-    from translator_tm_provider_pipelines_spark.streaming import dedup_index
-
-    idx = str(tmp_path / "idx")
-    di._write_batch(_df(spark, [(3, BASE), (4, BASE + " tail")]),
-                    idx, "docs", 0)
-    di._write_batch(
-        spark.createDataFrame([(3, 0, "B"), (4, 0, "B")],
-                              "doc_id int, band int, band_sig string"),
-        idx, "bands", 0,
-    )
-    seen = {}
-    real = dedup_index.reconcile_capped_buckets
-
-    def record(*a, **kw):
-        seen.update(kw)
-        return real(*a, **kw)
-
-    with mock.patch.object(dedup_index, "reconcile_capped_buckets", record):
-        cli.main([
-            "NEAR_DUP_INDEX_RECONCILE", "--indexDir", idx,
-            "--maxBucketSize", "1", "--noWatermarks",
-        ])
-    assert seen["use_watermarks"] is False
-    assert seen["persist_failures"] is False  # implied by --noWatermarks
-    # no failed/ table may exist after a pure control run
-    assert di._read_index(spark, idx, "failed") is None
 
 
 @pytest.mark.slow

@@ -207,8 +207,11 @@ def test_semmed_idf_partial_aggregation(spark):
 
 def test_star_components_long_chain_logarithmic(spark):
     # A 10k-node path graph has diameter 9999: min-label propagation would
-    # need ~10k rounds, the alternating star iteration must finish inside
-    # max_iter=30 (O(log n)) with every node labeled by the chain minimum.
+    # need ~10k rounds, the alternating star iteration (the distributed
+    # path of connected_components) must finish inside max_iter=30
+    # (O(log n)) with every node labeled by the chain minimum.
+    import pytest
+
     from translator_tm_provider_pipelines_spark.operators import dedup
 
     n = 10_000
@@ -216,9 +219,15 @@ def test_star_components_long_chain_logarithmic(spark):
         [(f"n{i:05d}", f"n{i + 1:05d}") for i in range(n - 1)],
         "doc_a string, doc_b string",
     )
-    comp = dedup.connected_components_star(pairs, max_iter=30).collect()
+    comp = dedup.connected_components(
+        pairs, max_iter=30, driver_threshold=0
+    ).collect()
     assert len(comp) == n
     assert {r.component for r in comp} == {"n00000"}
+    # a round budget that ends before the fixpoint raises instead of
+    # returning a split labelling
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(pairs, max_iter=2, driver_threshold=0)
 
 
 def test_star_components_agree_with_label_propagation(spark):
@@ -230,14 +239,17 @@ def test_star_components_agree_with_label_propagation(spark):
         ("x", "y"), ("y", "z"), ("z", "x"),      # triangle
         ("q", "p"),                               # simple pair
     ]
+    # a 120-node path: label propagation would need ~120 rounds (one per
+    # hop of diameter), more than the default max_iter of 50
+    edges += [(f"w{i:03d}", f"w{i + 1:03d}") for i in range(119)]
     pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
     star = {(r.node, r.component)
-            for r in dedup.connected_components_star(pairs).collect()}
-    label = {(r.node, r.component)
-             for r in dedup.connected_components(pairs, driver_threshold=0).collect()}
+            for r in dedup.connected_components(pairs, driver_threshold=0).collect()}
     driver = {(r.node, r.component)
               for r in dedup.connected_components(pairs).collect()}
-    assert star == label == driver
+    assert star == driver
+    assert {c for n, c in driver if n.startswith("w")} == {"w000"}
+    assert len(driver) == 4 + 3 + 2 + 120
 
 
 def test_ner_token_chain_single_exchange_and_sort(spark):

@@ -89,7 +89,7 @@ def test_semantic_version_total_order(spark, pairs):
 
 
 def test_connected_components_properties(spark):
-    """Components from min-label propagation: every node labeled by its
+    """Connected components: every node labeled by its
     component minimum; chain graphs (worst diameter) converge; singleton
     pairs map to their smaller end."""
     from translator_tm_provider_pipelines_spark.operators import dedup
@@ -101,7 +101,7 @@ def test_connected_components_properties(spark):
     comp = {r.node: r.component for r in dedup.connected_components(pairs).collect()}
     assert all(comp[i] == 0 for i in range(10))
     assert all(comp[i] == 20 for i in (20, 21, 22))
-    # the distributed label-propagation path (driver_threshold=0) must
+    # the distributed star-iteration path (driver_threshold=0) must
     # produce the identical labeling as the driver union-find fast path
     dist = {
         r.node: r.component

@@ -122,3 +122,22 @@ def test_cli_explicit_staging_dir_is_kept(spark, tmp_path):
         n.startswith("stage-") for n in os.listdir(sdir)
     )
     assert spark.conf.get(STAGING_DIR_CONF, None) in (None, "")
+
+
+def test_cli_trailing_staging_dir_without_value_fails(tmp_path):
+    """A trailing ``--stagingDir`` with no value is a usage error, not a
+    silent fallback to the default staging location."""
+    import pytest
+
+    out = str(tmp_path / "keep")
+    with pytest.raises(SystemExit, match="--stagingDir needs a value"):
+        cli.main(
+            [
+                "NEAR_DUP_KEEP_BEST",
+                "--documents", str(tmp_path / "docs"),
+                "--output", out,
+                "--qualityColumn", "quality",
+                "--stagingDir",
+            ]
+        )
+    assert not os.path.exists(out)

@@ -630,17 +630,6 @@ def run_near_dup_index_reconcile(spark: SparkSession, argv: list[str]) -> None:
     p.add_argument("--repairHops", type=int, default=0,
                    help="star second-hop repair passes after the base "
                         "re-star; negative = until converged")
-    p.add_argument("--noWatermarks", action="store_true",
-                   help="ground-truth control: ignore AND do not advance "
-                        "stored repair watermarks, re-verifying every "
-                        "over-cap bucket. Implies --noPersistFailures — a "
-                        "true control must not skip known-failed edges "
-                        "either, and must not record this diagnostic "
-                        "run's failures into the live index")
-    p.add_argument("--noPersistFailures", action="store_true",
-                   help="neither skip known-failed edges nor record this "
-                        "run's failures (ground-truth control runs; "
-                        "implied by --noWatermarks)")
     p.add_argument("--freshRepsPerBucket", type=int, default=64,
                    help="per-bucket per-run bound on the untried-member "
                         "rescue star (unattached over-cap members with "
@@ -662,12 +651,6 @@ def run_near_dup_index_reconcile(spark: SparkSession, argv: list[str]) -> None:
     repaired = di.reconcile_capped_buckets(
         spark, ns.indexDir, ns.maxBucketSize, threshold=ns.threshold,
         reconcile_id=ns.reconcileId, repair_hops=ns.repairHops,
-        use_watermarks=not ns.noWatermarks,
-        # --noWatermarks implies --noPersistFailures: with failures still
-        # persisted (or skipped) the "re-verify everything" promise above
-        # would be false, and the control would contaminate the live
-        # failed/ table with a partition keyed by this diagnostic run's id
-        persist_failures=not (ns.noPersistFailures or ns.noWatermarks),
         fresh_reps_per_bucket=ns.freshRepsPerBucket,
         rescue_min_shared_bands=ns.rescueMinBands,
     )
@@ -707,7 +690,6 @@ def run_near_dup_index_stats(spark: SparkSession, argv: list[str]) -> None:
     p.add_argument("--threshold", type=float, default=0.8)
     p.add_argument("--shingleK", type=int, default=3)
     p.add_argument("--repairHops", type=int, default=0)
-    p.add_argument("--repsPerHop", type=int, default=8)
     p.add_argument("--freshRepsPerBucket", type=int, default=64)
     p.add_argument("--rescueMinBands", type=int, default=1)
     ns = p.parse_args(argv)
@@ -717,7 +699,6 @@ def run_near_dup_index_stats(spark: SparkSession, argv: list[str]) -> None:
             "threshold": ns.threshold,
             "k": ns.shingleK,
             "repair_hops": ns.repairHops,
-            "reps_per_hop": ns.repsPerHop,
             "fresh_reps_per_bucket": ns.freshRepsPerBucket,
             "rescue_min_shared_bands": ns.rescueMinBands,
         }
@@ -1599,7 +1580,10 @@ def main(argv: list[str] | None = None) -> int:
     staging: str | None = None
     user_staging = False
     for i, a in enumerate(rest):
-        if a == "--stagingDir" and i + 1 < len(rest):
+        if a == "--stagingDir":
+            if i + 1 == len(rest):
+                raise SystemExit("--stagingDir needs a value (use --stagingDir '' "
+                                 "for localCheckpoint staging)")
             staging, user_staging = rest[i + 1], True
             del rest[i : i + 2]
             break

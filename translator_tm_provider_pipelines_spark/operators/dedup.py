@@ -487,7 +487,7 @@ def _star_untried_edges(
 
     ``overcap_bands`` (optional): the over-cap band-row restriction
     (doc_id, band, band_sig) precomputed — and typically
-    localCheckpoint'd — by the caller. The rescue loop calls this
+    staged — by the caller. The rescue loop calls this
     function every round, and without it each round re-derives the full
     band pipeline and the bucket-size aggregate from scratch even
     though the band table is static within a run (r11). The
@@ -578,49 +578,27 @@ def star_rescue_pairs(
         bands, verified, max_bucket_size, attempted=attempted,
         min_shared_bands=min_shared_bands, overcap_bands=overcap_bands,
     )
-    chosen = (
-        edges.groupBy("band", "band_sig")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_set("__m")), 1, reps_per_bucket
-            ).alias("__rs")
-        )
-        .select("band", "band_sig", F.explode("__rs").alias("__m"))
+    return _rescue_slice(edges, reps_per_bucket)[0]
+
+
+def _rescue_slice(edges: DataFrame, reps_per_bucket: int) -> tuple[DataFrame, DataFrame]:
+    """One rescue round over :func:`_star_untried_edges` rows: the
+    ``reps_per_bucket`` smallest eligible members of each bucket propose
+    all their untried edges. Returns the (doc_a, doc_b) candidates and
+    the per-bucket member lists ``(band, band_sig, __ms)``, from which a
+    scoped caller reads the buckets that overflowed the bound."""
+    ms = edges.groupBy("band", "band_sig").agg(
+        F.array_sort(F.collect_set("__m")).alias("__ms")
     )
-    return (
+    chosen = ms.select(
+        "band", "band_sig", F.explode(F.slice("__ms", 1, reps_per_bucket)).alias("__m")
+    )
+    cands = (
         edges.join(chosen, ["band", "band_sig", "__m"], "left_semi")
         .select("doc_a", "doc_b")
         .distinct()
     )
-
-
-def jaccard_for_pairs(shingles: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact shingle-set Jaccard for given (doc_a, doc_b) pairs — the
-    verification stage after LSH candidate generation."""
-    counts = shingles.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sa = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        pairs.join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    return (
-        pairs.join(inter, ["doc_a", "doc_b"], "left")
-        .na.fill({"n_inter": 0})
-        .join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 8
-            ).alias("jaccard"),
-        )
-    )
+    return cands, ms
 
 
 def near_duplicates(
@@ -631,7 +609,6 @@ def near_duplicates(
     rows_per_band: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist: bool = False,
     max_bucket_size: int | None = None,
     oversize_policy: str = "drop",
     star_repair_hops: int = 0,
@@ -699,16 +676,13 @@ def near_duplicates(
     explode, so the widest relation scales with the near-dup population,
     not the corpus. The candidate chain is evaluated twice (once for the
     id filter, once for the pairs) — it is a cheap narrow pass, and
-    recompute beats persisting it (measured; same reasoning as below).
+    recompute beats persisting it (measured).
 
-    ``persist`` (off by default — measured slower at bench scale: caching
-    serializes the shingle relation and breaks codegen pipelines, while
-    recompute is one cheap scan) caches shingles for the Jaccard branch;
-    enable it when the upstream is expensive, or better, write
-    shingles/signatures to intermediate tables at 100 TB."""
+    The hop and rescue rounds run in :func:`star_repair`, the loop the
+    incremental index's reconcile shares."""
     if star_rescue_reps < 0:
         # the rescue loop runs on truthiness; a negative bound would
-        # reach star_rescue_pairs as an ill-defined F.slice length
+        # reach the rescue slice as an ill-defined F.slice length
         # (same guard as the incremental index's reconcile, r12 ADVICE)
         raise ValueError(
             f"star_rescue_reps must be >= 0 (0 disables the rescue), "
@@ -718,9 +692,9 @@ def near_duplicates(
         docs, k=k, num_perms=num_perms, text_col=text_col, id_col=id_col
     )
     bands_df = lsh_bands(sig, rows_per_band)
-    # LAZY localCheckpoint: the candidate-pair frame is consumed at least
-    # twice (the verify stage's id semi-join + the pair join) and by
-    # every hop/rescue round's anti-join — without it each consumer
+    # LAZY stage: the candidate-pair frame is consumed at least twice
+    # (the verify stage's id semi-join + the pair join) and by every
+    # hop/rescue round's anti-join — without it each consumer
     # re-evaluates the whole minhash→bands→bucket tower over the corpus
     # (3 full-corpus evaluations in the r11 near_duplicates plan; guide
     # §1.2 "don't compute things twice"). Lazy (eager=False) so plan
@@ -738,115 +712,142 @@ def near_duplicates(
         eager=False,
     )
     verified = _verify_candidates(
-        docs, cands, k=k, threshold=threshold, text_col=text_col,
-        id_col=id_col, persist=persist,
+        docs, cands, k=k, threshold=threshold, text_col=text_col, id_col=id_col
     )
-    attempted = cands
-    run_hops = bool(
-        star_repair_hops and max_bucket_size is not None
-        and oversize_policy == "star"
-    )
-    run_rescue = bool(
-        star_rescue_reps and max_bucket_size is not None
-        and oversize_policy == "star"
-    )
-    ob_cap = None
+    if max_bucket_size is None or oversize_policy != "star":
+        return verified
+    return star_repair(
+        docs, bands_df, verified, cands, max_bucket_size, k=k,
+        threshold=threshold, text_col=text_col, id_col=id_col,
+        hops=star_repair_hops, rescue_reps=star_rescue_reps,
+        rescue_min_bands=star_rescue_min_bands, stats=repair_stats,
+    )[0]
 
-    def _materialize_overcap() -> DataFrame:
-        # the hop/rescue loops only ever look at OVER-CAP bucket band
-        # rows, and the band table is static within a run — when a loop
-        # enters its SECOND round, derive and materialize that
-        # restriction once so later rounds reuse it instead of
-        # re-running the minhash→bands→sizes pipeline per iteration
-        # (r11: the converged sf10 hop loop re-derived the full-corpus
-        # band table 6×). Lazy on purpose: a single-round run is
-        # cheaper re-deriving than checkpointing (measured at sf0.1 —
-        # the eager version cost the 1-hop bench query ~2 s in pure
-        # job-scheduling overhead). Over-cap rows are
-        # boilerplate-population sized — safe to checkpoint.
-        return stage(_overcap_band_rows(bands_df, max_bucket_size))
 
-    if run_hops:
-        # star_repair_hops < 0 = repair until converged (the loop breaks
-        # as soon as a hop yields no fresh candidates; the `attempted`
-        # anti-join guarantees each hop shrinks the untried edge set, so
-        # convergence is bounded by over-cap bucket edges / reps_per_hop
-        # — at sf10 full convergence took 6 hops, SCALING.md)
-        n_hops = star_repair_hops if star_repair_hops > 0 else 1_000_000
-        hops_run, converged = 0, False
-        for _ in range(n_hops):
-            # checkpoint: the next hop's anti-joins read `verified` twice
-            # (id set + final union) and the hop loop would otherwise
-            # stack the whole verify pipeline per iteration
+def star_repair(
+    docs: DataFrame,
+    bands: DataFrame,
+    verified: DataFrame,
+    tried: DataFrame,
+    max_bucket_size: int,
+    k: int,
+    threshold: float,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    hops: int = 0,
+    reps_per_hop: int = 8,
+    rescue_reps: int = 0,
+    rescue_min_bands: int = 1,
+    known: DataFrame | None = None,
+    failed: DataFrame | None = None,
+    scope: DataFrame | None = None,
+    stats: dict | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The star-policy repair loop shared by :func:`near_duplicates` and
+    the incremental index's reconcile: up to ``hops`` rounds of
+    :func:`star_second_hop_pairs` (negative = until no fresh candidate),
+    then, with ``rescue_reps``, rescue rounds (:func:`star_rescue_pairs`)
+    until no qualifying untried edge remains. Every round stages the
+    verified set and its candidates, stops on an empty candidate set,
+    exact-Jaccard verifies the rest against ``docs`` and unions them into
+    the verified and attempted sets, so failed edges are never retried.
+
+    ``verified`` (doc_a, doc_b, jaccard) and ``tried`` (doc_a, doc_b) are
+    this run's verified pairs and candidates so far. The incremental
+    caller seeds what earlier runs established: ``known`` pairs count as
+    attached and as attempted, ``failed`` pairs as attempted only, and
+    ``scope`` (band, band_sig) restricts the hop rounds and the rescue's
+    eligible members to its active buckets. In scoped mode each rescue
+    round's next scope is every over-cap bucket touching a newly verified
+    pair plus the buckets whose member slice overflowed ``rescue_reps``
+    (see :func:`_star_untried_edges` for why the pair enumeration itself
+    stays unscoped). Returns ``(verified, tried)`` with every round's
+    pairs and candidates added; ``stats`` receives ``hops_run`` /
+    ``converged`` and ``rescue_rounds`` / ``rescue_converged``.
+
+    The loop-static inputs — the over-cap band rows and the attempted
+    union — are staged at the first productive round of a loop that can
+    run another round, so later rounds reuse them while a single-round
+    run (the common 1-hop setting) never pays the checkpoint (measured at
+    sf0.1: the eager version cost the 1-hop bench query ~2 s in pure
+    job-scheduling overhead; r11: the converged sf10 hop loop otherwise
+    re-derived the full-corpus band table 6×)."""
+    attempted = tried
+    for seed in (known, failed):
+        if seed is not None:
+            attempted = attempted.unionByName(seed)
+    overcap, active = None, scope  # the rescue rounds move `scope`
+
+    def in_scope(df: DataFrame) -> DataFrame:
+        if active is None:
+            return df
+        return df.join(active, ["band", "band_sig"], "left_semi")
+
+    # hops < 0 and the rescue repeat until converged; each round shrinks
+    # the finite untried edge set, so the loop bound is never reached
+    loops = ((False, hops if hops >= 0 else 1_000_000),
+             (True, 1_000_000 if rescue_reps else 0))
+    for rescue, limit in loops:
+        if not limit:
+            continue
+        done, converged = 0, False
+        for _ in range(limit):
+            # stage: the round reads `verified` twice (id set + union) and
+            # the loop would otherwise stack the verify pipeline per round
             verified = stage(verified)
-            cand2 = stage(
-                star_second_hop_pairs(
-                    bands_df, verified, max_bucket_size, attempted=attempted,
-                    overcap_bands=ob_cap,
+            pairs = verified
+            if known is not None:
+                pairs = stage(verified.select("doc_a", "doc_b").unionByName(known))
+            if not rescue:
+                cands = star_second_hop_pairs(
+                    in_scope(bands), pairs, max_bucket_size,
+                    attempted=attempted, reps_per_hop=reps_per_hop,
+                    overcap_bands=None if overcap is None else in_scope(overcap),
                 )
-            )
-            if not cand2.head(1):
+            else:
+                edges = _star_untried_edges(
+                    bands, pairs, max_bucket_size, attempted=attempted,
+                    min_shared_bands=rescue_min_bands, member_buckets=scope,
+                    overcap_bands=overcap,
+                )
+                if scope is not None:
+                    # read again for the next round's overflow scope
+                    edges = stage(edges)
+                cands, ms = _rescue_slice(edges, rescue_reps)
+            cands = stage(cands)
+            if not cands.head(1):
                 converged = True
                 break
-            if hops_run == 0 and n_hops > 1:
-                # a further hop is possible: materialize the loop's
-                # static inputs once (_materialize_overcap rationale)
-                if ob_cap is None:
-                    ob_cap = _materialize_overcap()
+            if done == 0 and limit > 1:
+                if overcap is None:
+                    overcap = stage(_overcap_band_rows(bands, max_bucket_size))
                 attempted = stage(attempted)
-            hops_run += 1
-            v2 = _verify_candidates(
-                docs, cand2, k=k, threshold=threshold, text_col=text_col,
+            done += 1
+            v = _verify_candidates(
+                docs, cands, k=k, threshold=threshold, text_col=text_col,
                 id_col=id_col,
             )
-            verified = verified.unionByName(v2)
-            attempted = attempted.unionByName(cand2)
-        if repair_stats is not None:
-            repair_stats.update({"hops_run": hops_run, "converged": converged})
-    if run_rescue:
-        # promotion-starvation rescue (star_rescue_pairs docstring): after
-        # the hop loop stalls, members with untried edges — skipped by the
-        # smallest-id ranking — get their turn, bounded per bucket per
-        # round. Each chosen member is fully attempted after its round, so
-        # the loop converges in ceil(stranded/reps) rounds.
-        rescue_rounds, rescue_converged = 0, False
-        while True:
-            verified = stage(verified)
-            cand3 = stage(
-                star_rescue_pairs(
-                    bands_df,
-                    verified,
-                    max_bucket_size,
-                    attempted=attempted,
-                    reps_per_bucket=star_rescue_reps,
-                    min_shared_bands=star_rescue_min_bands,
-                    overcap_bands=ob_cap,
+            if rescue and scope is not None:
+                # each round's attachments can create qualifying targets
+                # anywhere their members sit, watermark-covered buckets
+                # included: those buckets plus the overflowed slices are
+                # the next round's scope
+                v = stage(v)
+                touched = overcap.join(
+                    v.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id")),
+                    "doc_id", "left_semi",
+                ).select("band", "band_sig")
+                overflow = ms.where(F.size("__ms") > rescue_reps)
+                scope = stage(
+                    touched.unionByName(overflow.select("band", "band_sig")).distinct()
                 )
-            )
-            if not cand3.head(1):
-                rescue_converged = True
-                break
-            if rescue_rounds == 0:
-                # the while loop always admits another round: materialize
-                # the static inputs at the first productive round
-                # (_materialize_overcap rationale; ob_cap may already
-                # exist from the hop loop)
-                if ob_cap is None:
-                    ob_cap = _materialize_overcap()
-                attempted = stage(attempted)
-            rescue_rounds += 1
-            v3 = _verify_candidates(
-                docs, cand3, k=k, threshold=threshold, text_col=text_col,
-                id_col=id_col,
-            )
-            verified = verified.unionByName(v3)
-            attempted = attempted.unionByName(cand3)
-        if repair_stats is not None:
-            repair_stats.update(
-                {"rescue_rounds": rescue_rounds,
-                 "rescue_converged": rescue_converged}
-            )
-    return verified
+            verified = verified.unionByName(v)
+            tried = tried.unionByName(cands)
+            attempted = attempted.unionByName(cands)
+        if stats is not None:
+            keys = ("rescue_rounds", "rescue_converged") if rescue else ("hops_run", "converged")
+            stats.update(zip(keys, (done, converged)))
+    return verified, tried
 
 
 def distinct_shingle_arrays(
@@ -892,9 +893,8 @@ def jaccard_for_pairs_arrays(arrays: DataFrame, pairs: DataFrame) -> DataFrame:
     shuffled |pairs| x |shingles-of-doc_a| exploded rows into the
     (doc_b, shingle) join and paid a (doc_a, doc_b) groupBy on top;
     measured 2.2x on near_duplicates at sf0.1). Pairs whose doc is
-    absent from ``arrays`` (fewer than k words) are dropped, matching
-    the inner count-joins of :func:`jaccard_for_pairs`; pairs with no
-    shared shingle get jaccard 0.0, also as before.
+    absent from ``arrays`` (fewer than k words) are dropped by the inner
+    joins; pairs with no shared shingle get jaccard 0.0.
 
     The intersection size is staged as a real attribute through a select
     boundary so the jaccard expression references it twice without
@@ -930,7 +930,6 @@ def _verify_candidates(
     threshold: float,
     text_col: str,
     id_col: str,
-    persist: bool = False,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs: shingle ONLY the
     candidate documents (semi-join), attach each side's distinct-shingle
@@ -957,10 +956,6 @@ def _verify_candidates(
     arrays = distinct_shingle_arrays(
         cand_docs, k=k, text_col=text_col, id_col=id_col
     )
-    if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        arrays = arrays.persist(StorageLevel.MEMORY_AND_DISK)
     return jaccard_for_pairs_arrays(arrays, cands).where(
         F.col("jaccard") >= threshold
     )
@@ -1020,23 +1015,33 @@ def connected_components(
     driver_threshold: int = 100_000,
 ) -> DataFrame:
     """(node, component) for every node of the near-dup pair graph, where
-    ``component`` is the minimum member id — min-label propagation over
-    the symmetric edge list, one join + map-side-combining min per round,
-    converging in graph-diameter rounds (near-dup clusters are shallow:
-    members are mutually similar, so diameters are small). Labels only
-    decrease, so the fixpoint check is a changed-row count. For graphs
-    with adversarial diameters use :func:`connected_components_star`
-    (alternating large-star/small-star, O(log n) rounds on any
-    topology) — same output contract.
+    ``component`` is the minimum member id.
 
     Scale-adaptive: surviving near-dup edge sets are usually FAR smaller
     than the corpus (the whole point of dedup), and each distributed
     round costs a fixed multi-job overhead that dwarfs the work at that
     size. Up to ``driver_threshold`` edges the components come from a
-    driver-side union-find on the collected edge list — identical output
-    (min member id per component), one job instead of
-    diameter × (join + count). Above the threshold, or with
-    ``driver_threshold=0``, the distributed loop runs.
+    driver-side union-find on the collected edge list — one job. Above
+    the threshold, or with ``driver_threshold=0``, the alternating
+    large-star/small-star iteration runs (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond"): star contraction
+    halves path lengths every alternation, so it converges in O(log n)
+    rounds on ANY topology — a D-node chain does not need D rounds. Per
+    round, two shuffles:
+
+    - **large-star**: every node's strictly-larger neighbors re-point to
+      the minimum of its closed neighborhood — one groupBy(min) + one
+      join over the symmetric edge view;
+    - **small-star**: every node and its smaller neighbors re-point to
+      the smallest of them — one groupBy(min) + one join over the
+      (larger → smaller)-directed edge list that large-star guarantees.
+
+    The fixpoint is a star forest: each non-root points directly at its
+    component minimum. Each round's edges are staged (``stage``): every
+    round's frame references the previous one, so an unbroken lineage
+    doubles the logical plan per iteration. Raises ``RuntimeError`` when
+    ``max_iter`` rounds end before the fixpoint — a partial labelling
+    would silently split components.
 
     The threshold probe must not evaluate the (possibly expensive)
     upstream twice: the pair frame is persisted and the probe is ONE
@@ -1046,7 +1051,7 @@ def connected_components(
     dominate at bench scale). The count fully materializes the cache,
     which every continuation needs anyway: the small path re-reads it
     with one cached ``collect()``, the distributed path with the
-    symmetric edge checkpoint."""
+    oriented edge checkpoint."""
     from pyspark.storagelevel import StorageLevel
 
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
@@ -1081,88 +1086,14 @@ def connected_components(
             )
         e = e_probe
 
-    # localCheckpoint (not persist): every round's frame references the
-    # previous one, so a cached-but-unbroken lineage DOUBLES the logical
-    # plan per iteration and analysis time alone goes exponential in the
-    # round count. Checkpointing truncates the plan to the materialized
-    # data — each round's plan is flat.
+    # orient larger → smaller; the invariant v < u holds from here on
     edges = stage(
-        e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).distinct()
+        e.where(F.col("a") != F.col("b"))
+        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
+        .distinct()
     )
     if e_probe is not None:
         e_probe.unpersist()
-    labels = stage(
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(labels, edges.b == labels.node)
-            .select(edges.a.alias("node"), "label")
-            .groupBy("node")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias(
-                    "label"
-                ),
-                (F.coalesce("nbr_min", F.col("label")) < F.col("label")).alias(
-                    "__chg"
-                ),
-            )
-        )
-        new_labels = stage(new_labels)
-        changed = new_labels.where("__chg").count()
-        labels = new_labels.drop("__chg")
-        if changed == 0:
-            break
-    return labels.select("node", F.col("label").alias("component"))
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """(node, component) via the alternating large-star/small-star
-    iteration (Kiveris et al. 2014, "Connected Components in MapReduce
-    and Beyond") — the adversarial-diameter-safe companion to
-    :func:`connected_components`: min-label propagation needs
-    graph-diameter rounds (a D-node chain takes D rounds), while
-    star-contraction halves path lengths every alternation and converges
-    in O(log n) rounds on ANY topology. Same output contract: component
-    = minimum member id.
-
-    Per round, two shuffles:
-
-    - **large-star**: every node's strictly-larger neighbors re-point to
-      the minimum of its closed neighborhood — one groupBy(min) + one
-      join over the symmetric edge view;
-    - **small-star**: every node and its smaller neighbors re-point to
-      the smallest of them — one groupBy(min) + one join over the
-      (larger → smaller)-directed edge list that large-star guarantees.
-
-    Fixpoint = star forest: each non-root points directly at its
-    component minimum. localCheckpoint per round keeps plans flat,
-    exactly as in :func:`connected_components`. Use this variant when
-    cluster chains may be long (transitive near-dup chains, record-
-    linkage graphs); the default min-label loop stays cheaper on the
-    shallow clusters LSH dedup actually produces."""
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).where(
-        F.col("a") != F.col("b")
-    )
-    # orient larger → smaller; the invariant v < u holds from here on
-    edges = stage(
-        e.select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-        .distinct()
-    )
     n_edges = edges.count()
     for _ in range(max_iter):
         if n_edges == 0:
@@ -1191,9 +1122,12 @@ def connected_components_star(
         small = stage(small)
         n_small = small.count()
         if n_small == n_edges and small.exceptAll(edges).isEmpty():
-            edges = small
-            break
-        edges, n_edges = small, n_small
+            n_edges = 0
+        edges, n_edges = small, n_edges and n_small
+    if n_edges:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} rounds"
+        )
     members = edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = (
         edges.select(F.col("v").alias("node"))
@@ -1202,6 +1136,57 @@ def connected_components_star(
         .select("node", F.col("node").alias("component"))
     )
     return members.unionByName(roots)
+
+
+def keep_labels(
+    ids: DataFrame, pairs: DataFrame | None, quality: DataFrame | None = None
+) -> DataFrame:
+    """The keep-list labeler under every near-dup keep list, batch and
+    incremental: ``ids`` (doc_id) lists every document once, ``pairs``
+    (doc_a, doc_b) are its verified near-dup pairs (``None`` = none).
+    Returns (doc_id, canonical_id, is_kept): clusters are the connected
+    components of the pairs, ``canonical_id`` is the cluster's minimum
+    member (the stable cluster key), untouched documents keep themselves.
+
+    With ``quality`` (doc_id, __q) the output gains ``kept_id`` and the
+    kept member is the cluster's highest-quality member, doc-id ascending
+    as the tie-break. Members with no quality row or a null score rank
+    below every scored member (quality −∞); a document with several
+    quality rows scores as their max. The argmax runs over cluster
+    MEMBERS only (r12): an untouched document is its own singleton, its
+    kept_id forced, so the aggregate moves member rows, never the
+    corpus. kept_id is attached to the member-sized component relation
+    first and the corpus is then labelled with ONE join (r13, guide
+    §2.4) — cluster ids are min MEMBER ids, so they never collide with a
+    doc id outside the components."""
+    if pairs is None:
+        canonical, kept, out = F.col("doc_id"), F.col("doc_id"), ids
+    else:
+        comp = connected_components(pairs)
+        if quality is not None:
+            inf = F.lit(float("inf"))
+            nq = F.coalesce(-F.col("__q").cast("double"), inf)
+            best = (
+                quality.join(comp, F.col("doc_id") == F.col("node"))
+                .groupBy("component")
+                .agg(F.min(F.struct(nq.alias("nq"), F.col("node").alias("d"))).alias("__b"))
+                .select(
+                    F.col("component").alias("__bc"),
+                    F.when(F.col("__b.nq") < inf, F.col("__b.d")).alias("kept_id"),
+                )
+            )
+            # a cluster with no scored member keeps its min id, like the
+            # members that have no quality row at all (not in the join)
+            comp = comp.join(best, F.col("component") == F.col("__bc"), "left").select(
+                "node", "component", F.coalesce("kept_id", "component").alias("kept_id")
+            )
+        out = ids.join(comp, F.col("doc_id") == F.col("node"), "left")
+        canonical = F.coalesce(F.col("component"), F.col("doc_id"))
+        kept = F.coalesce(F.col("kept_id"), F.col("doc_id")) if quality is not None else canonical
+    cols = [F.col("doc_id"), canonical.alias("canonical_id"), (F.col("doc_id") == kept).alias("is_kept")]
+    if quality is not None:
+        cols.append(kept.alias("kept_id"))
+    return out.select(*cols)
 
 
 def near_dup_keep_list(
@@ -1246,16 +1231,7 @@ def near_dup_keep_list(
         star_rescue_min_bands=star_rescue_min_bands,
         repair_stats=repair_stats,
     )
-    comp = connected_components(pairs)
-    out = docs.select(F.col(id_col).alias("doc_id")).join(
-        comp, F.col("doc_id") == comp.node, "left"
-    )
-    canonical = F.coalesce(F.col("component"), F.col("doc_id"))
-    return out.select(
-        "doc_id",
-        canonical.alias("canonical_id"),
-        (canonical == F.col("doc_id")).alias("is_kept"),
-    )
+    return keep_labels(docs.select(F.col(id_col).alias("doc_id")), pairs)
 
 
 def near_dup_keep_best(
@@ -1279,16 +1255,17 @@ def near_dup_keep_best(
     :func:`near_dup_keep_list` (``canonical_id`` stays the minimum-id
     member, the stable CLUSTER key), but the kept representative is the
     member with the highest ``quality_col`` value, doc-id ascending as
-    the tie-break. Min-id keep discards high-quality copies in favor of
-    whichever duplicate happened to get the smallest id; at pretraining
-    scale the kept copy is the one the model sees, so keep the best.
-    Output: (doc_id, canonical_id, is_kept, kept_id) — ``kept_id`` is the
-    chosen representative for the doc's cluster (equal to doc_id for
-    untouched docs).
+    the tie-break; members with a null score rank last. Min-id keep
+    discards high-quality copies in favor of whichever duplicate
+    happened to get the smallest id; at pretraining scale the kept copy
+    is the one the model sees, so keep the best. Output: (doc_id,
+    canonical_id, is_kept, kept_id) — ``kept_id`` is the chosen
+    representative for the doc's cluster (equal to doc_id for untouched
+    docs).
 
     One extra shuffle over the min-id variant: an argmax-by-struct
     aggregate per component (map-side combined, volume = cluster
-    members), no window sort."""
+    members), no window sort (:func:`keep_labels`)."""
     pairs = near_duplicates(
         docs,
         threshold=threshold,
@@ -1304,51 +1281,8 @@ def near_dup_keep_best(
         star_rescue_min_bands=star_rescue_min_bands,
         repair_stats=repair_stats,
     )
-    comp = connected_components(pairs)
-    # argmax(quality, tie min doc_id) per CLUSTER, computed over cluster
-    # MEMBERS only (r12): an untouched document is always its own singleton
-    # group — its kept_id is itself by construction — so grouping the whole
-    # corpus by canonical_id (as before) aggregated and re-shuffled mostly
-    # rows whose answer is forced. The member set is comp-sized (the
-    # near-dup population, the quantity dedup exists to make small), so the
-    # argmax aggregate and the kept_id attach below move member rows, never
-    # the corpus, and the corpus frame is evaluated once instead of twice
-    # (the old scored frame fed both the groupBy and the final join).
-    # Cluster ids can't collide with untouched doc_ids: a cluster's
-    # canonical is its min member id and that member IS in comp.
-    members = docs.select(
-        F.col(id_col).alias("__mid"), F.col(quality_col).alias("__q")
-    ).join(comp, F.col("__mid") == comp.node, "inner")
-    best = (
-        members.groupBy("component")
-        .agg(
-            F.min(F.struct((-F.col("__q")).alias("nq"), F.col("__mid").alias("d")))
-            .alias("__b")
-        )
-        .select(F.col("component").alias("__bc"), F.col("__b.d").alias("kept_id"))
-    )
-    # ONE corpus-side join (r13, guide §2.4): attach kept_id to the
-    # member-sized comp relation first (every component's members are in
-    # comp, so the inner join keeps every node), then label the corpus
-    # once. The previous form joined the corpus against comp AND then
-    # against best (keyed on the derived canonical_id) — two corpus-wide
-    # probe passes for one lookup. Untouched docs coalesce to themselves
-    # exactly as before (cluster ids are min MEMBER ids, so they can
-    # never collide with a doc id outside comp).
-    comp_kept = comp.join(best, comp.component == F.col("__bc"), "inner").select(
-        "node", "component", "kept_id"
-    )
-    out = docs.select(F.col(id_col).alias("doc_id")).join(
-        comp_kept, F.col("doc_id") == F.col("node"), "left"
-    )
-    canonical = F.coalesce(F.col("component"), F.col("doc_id"))
-    kept = F.coalesce(F.col("kept_id"), F.col("doc_id"))
-    return out.select(
-        "doc_id",
-        canonical.alias("canonical_id"),
-        (F.col("doc_id") == kept).alias("is_kept"),
-        kept.alias("kept_id"),
-    )
+    quality = docs.select(F.col(id_col).alias("doc_id"), F.col(quality_col).alias("__q"))
+    return keep_labels(docs.select(F.col(id_col).alias("doc_id")), pairs, quality)
 
 
 # ---------------------------------------------------------------------------

@@ -1606,8 +1606,9 @@ def near_dup_star_repaired_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: same checkpointed-lineage treatment the rescued query got in
     # r11 task 4. near_duplicates(star_repair_hops=1) checkpoints
     # `verified` inside the hop loop, but v1's OWN lineage still
-    # re-derives the minhash→bands→star pipeline per consumer (id
-    # semi-join + three joins in jaccard_for_pairs), and the hop reads
+    # re-derives the minhash→bands→star pipeline per consumer (the
+    # verify stage's id semi-join and its pair joins in
+    # jaccard_for_pairs_arrays), and the hop reads
     # the band lineage again — ~6.6 s / 1.27× its v2 median at sf0.1 in
     # the r11 bench. Materializing the loop-static band and candidate
     # tables once runs each base stage exactly once; the hop then builds
@@ -1730,8 +1731,9 @@ def near_dup_star_rescued_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the band table and the base candidate set ONCE: both
     # are tiny (4 band rows per doc; candidate pairs are star-bounded)
     # but sit under every downstream consumer — v1 evaluates the
-    # candidate lineage four times (id semi-join + three joins in
-    # jaccard_for_pairs), the rescue reads bands twice and anti-joins
+    # candidate lineage once per consumer (the verify stage's id
+    # semi-join and its pair joins in jaccard_for_pairs_arrays), the
+    # rescue reads bands twice and anti-joins
     # the attempted set. Without the checkpoints the whole
     # minhash→bands→star pipeline re-runs per consumer (~95 Spark
     # stages, 11.3 s at sf0.1 in the r10 bench); with them the query
@@ -1804,7 +1806,7 @@ def near_dup_star_rescued_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def near_dup_keep_list_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup end product: every document mapped to the minimum-id
     member of its near-duplicate cluster (MinHash-LSH → exact Jaccard →
-    connected components via min-label propagation) with an is_kept
+    connected components) with an is_kept
     flag. The oracle closes the same pair graph with a recursive
     reachability CTE."""
     return dedup.near_dup_keep_list(_t(spark, sf_dir, "documents"), threshold=0.8)
